@@ -240,10 +240,6 @@ def _decode_fields(buf: bytes, table: list[tuple[int, str, str, bool]]) -> dict:
     return d
 
 
-def encode_metric(m: dict) -> bytes:
-    return _encode_fields(m, METRIC_FIELDS)
-
-
 def encode_sensor_event(e: dict) -> bytes:
     """SensorEvent dict (tests/fixtures.py shape) → proto3 bytes."""
     return _encode_fields(e, SENSOR_EVENT_FIELDS)

@@ -1,126 +1,179 @@
-"""Unit-pin the bench's stage-metrics attribution (bench.py:
-_stage_metrics_since): stages are attributed to a query by MONOTONIC
-stage id relative to the pre-run snapshot, so UI eviction of old
-stages can never corrupt the diff, and the summed REST field names
-stay in sync with what the status API actually serves (the live
-end-to-end evidence is the bench run itself — BENCH_LOCAL.json
-`stage_metrics` with 45/45 queries captured)."""
+"""Unit-pin the bench's stage-metrics reader (bench_eventlog.StageLog)
+on a small recorded event log, tests/data/bench_eventlog.jsonl (how it
+was recorded: tests/data/make_bench_eventlog.py). Every measured run in
+bench.py and the scale-probe tools executes under its own job group;
+the reader must attribute exactly that group's stages, sum the
+executor-reported bytes, pick the heaviest stage's task quantiles, and
+read AQE's skew-split marker from the group's SQL plans — all with the
+UI off."""
 
 from __future__ import annotations
 
-import bench
+import json
+import os
+
+import pytest
+
+import bench_eventlog
+
+LOG = os.path.join(os.path.dirname(__file__), "data", "bench_eventlog.jsonl")
 
 
-def _fake_stage(stage_id, **kw):
-    base = {
-        "stageId": stage_id,
-        "numTasks": 4,
-        "numCompleteTasks": 4,
-        "inputBytes": 1_000_000,
-        "shuffleWriteBytes": 250_000,
-        "shuffleReadBytes": 250_000,
-        "memoryBytesSpilled": 0,
-        "diskBytesSpilled": 0,
-    }
-    base.update(kw)
-    return base
+@pytest.fixture(scope="module")
+def log() -> bench_eventlog.StageLog:
+    with open(LOG) as f:
+        return bench_eventlog.StageLog(f)
 
 
-def test_only_stages_after_snapshot_are_attributed(monkeypatch):
-    stages = [
-        _fake_stage(3),  # before the snapshot: someone else's work
-        _fake_stage(7, inputBytes=2_000_000, diskBytesSpilled=500_000),
-        _fake_stage(8, shuffleWriteBytes=750_000),
-    ]
-    monkeypatch.setattr(bench, "_completed_stages", lambda spark: stages)
-    m = bench._stage_metrics_since(None, prev_max_stage_id=3)
-    assert m["stages"] == 2 and m["tasks"] == 8
-    assert m["input_mb"] == 3.0  # stage 3 excluded
-    assert m["shuffle_write_mb"] == 1.0
-    assert m["spill_disk_mb"] == 0.5
-    assert m["spill_mem_mb"] == 0.0
+def _events(kind: str) -> list[dict]:
+    with open(LOG) as f:
+        return [e for e in map(json.loads, f) if e["Event"].endswith(kind)]
 
 
-def test_no_new_stages_yields_none(monkeypatch):
-    """A query whose stages were all reused (or a REST hiccup returning
-    []) records no metrics rather than zeros-that-look-measured."""
-    monkeypatch.setattr(
-        bench, "_completed_stages", lambda spark: [_fake_stage(5)]
+def test_stages_attributed_per_group(log):
+    """Each group gets exactly the stages submitted under it, with the
+    REST-era fields; ungrouped jobs before and after never leak in."""
+    submitted = {}
+    for e in _events("StageSubmitted"):
+        group = e["Properties"].get("spark.jobGroup.id")
+        submitted.setdefault(group, set()).add(e["Stage Info"]["Stage ID"])
+    assert None in submitted  # the ungrouped jobs are in the log
+    for group in ("q:scan", "q:skew", "q:noskew", "q:rdd"):
+        m = log.stage_metrics(group)
+        assert set(m) == {
+            "stages",
+            "tasks",
+            "input_mb",
+            "shuffle_write_mb",
+            "shuffle_read_mb",
+            "spill_mem_mb",
+            "spill_disk_mb",
+        }
+        assert m["stages"] == len(submitted[group])
+        ok = [
+            e
+            for e in _events("TaskEnd")
+            if e["Stage ID"] in submitted[group]
+            and e["Task End Reason"]["Reason"] == "Success"
+        ]
+        assert m["tasks"] == len(ok)
+    scan = log.stage_metrics("q:scan")
+    assert scan["input_mb"] > 0 and scan["shuffle_write_mb"] > 0
+    assert scan["spill_disk_mb"] == 0.0
+    skew = log.stage_metrics("q:skew")
+    # the join's shuffle bytes are the same plan either way; only the
+    # forced-spill sorter reports spill
+    assert skew["shuffle_write_mb"] == log.stage_metrics("q:noskew")["shuffle_write_mb"]
+    assert skew["spill_disk_mb"] > 0 and skew["spill_mem_mb"] > 0
+
+
+def test_byte_sums_match_task_metrics(log):
+    """The summed fields are the group's TaskEnd metrics, in MB."""
+    stages = {s for s, g in log.stage_group.items() if g == "q:skew"}
+    tasks = [e["Task Metrics"] for e in _events("TaskEnd") if e["Stage ID"] in stages]
+    written = sum(t["Shuffle Write Metrics"]["Shuffle Bytes Written"] for t in tasks)
+    read = sum(
+        t["Shuffle Read Metrics"]["Remote Bytes Read"]
+        + t["Shuffle Read Metrics"]["Local Bytes Read"]
+        for t in tasks
     )
-    assert bench._stage_metrics_since(None, prev_max_stage_id=5) is None
-    monkeypatch.setattr(bench, "_completed_stages", lambda spark: [])
-    assert bench._stage_metrics_since(None, prev_max_stage_id=-1) is None
+    m = log.stage_metrics("q:skew")
+    assert m["shuffle_write_mb"] == round(written / 1e6, 2)
+    assert m["shuffle_read_mb"] == round(read / 1e6, 2)
+    assert m["spill_disk_mb"] == round(sum(t["Disk Bytes Spilled"] for t in tasks) / 1e6, 2)
 
 
-def test_max_stage_id_none_when_unreachable(monkeypatch):
-    """No completed stages (UI off / REST down) → snapshot is None and
-    the headline loop skips capture instead of mis-attributing."""
-    monkeypatch.setattr(bench, "_completed_stages", lambda spark: [])
-    assert bench._max_stage_id(None) is None
+def test_no_new_stages_yields_none(log):
+    """A group with no submitted stage (never run, or every stage
+    reused) records no metrics rather than zeros-that-look-measured."""
+    assert log.stage_metrics("q:never") is None
+    assert bench_eventlog.StageLog([]).stage_metrics("q:scan") is None
 
 
-def test_task_time_dist_picks_heaviest_stage(monkeypatch):
-    """The skew probe's per-task distribution must come from the stage
-    with the most total executor time — that's where a straggler
-    serializes — and report max/median from the taskSummary quantiles."""
-    captured = {}
+def test_task_time_dist_empty_stages_yields_empty(log):
+    assert log.task_time_dist("q:never") == {}
 
-    class _Resp:
-        def __init__(self, payload):
-            self._p = payload
 
-        def __enter__(self):
-            return self
+def test_task_time_dist_picks_heaviest_stage(log):
+    """Quantiles come from the stage with the most total executor time
+    — that's where a straggler serializes — and report max/median."""
+    stages = {s for s, g in log.stage_group.items() if g == "q:skew"}
+    runs: dict[int, list[int]] = {}
+    for e in _events("TaskEnd"):
+        if e["Stage ID"] in stages:
+            runs.setdefault(e["Stage ID"], []).append(e["Task Metrics"]["Executor Run Time"])
+    heavy = sorted(max(runs.values(), key=sum))
+    d = log.task_time_dist("q:skew")
+    assert d["heavy_stage_tasks"] == len(heavy)
+    assert d["task_max_ms"] == heavy[-1]
+    assert d["task_med_ms"] == heavy[len(heavy) // 2]
+    assert d["task_imbalance"] == round(heavy[-1] / heavy[len(heavy) // 2], 2)
 
-        def __exit__(self, *a):
-            return False
 
-        def read(self):
-            import json
+def test_task_time_dist_quantiles_and_imbalance():
+    """The status store's quantile indexing, on a hand-written log:
+    median = sorted[n // 2], imbalance = max / median."""
 
-            return json.dumps(self._p).encode()
+    def line(event: dict) -> str:
+        return json.dumps(event, separators=(",", ":"))
 
-    def fake_urlopen(url, timeout=10):
-        captured["url"] = url
-        return _Resp({"executorRunTime": [10.0, 120.0, 480.0]})
-
-    import urllib.request
-
-    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
-
-    class _SC:
-        uiWebUrl = "http://localhost:4040"
-        applicationId = "app-1"
-
-    class _Spark:
-        sparkContext = _SC()
-
-    stages = [
-        _fake_stage(10, executorRunTime=500),
-        _fake_stage(11, executorRunTime=9_000, numCompleteTasks=32),
-        _fake_stage(12, executorRunTime=700),
+    lines = [
+        line({"Event": "SparkListenerStageSubmitted", "Stage Info": {"Stage ID": s}, "Properties": {"spark.jobGroup.id": "g"}})
+        for s in (1, 2)
     ]
-    m = bench._task_time_dist(_Spark(), stages)
-    assert "/stages/11/0/taskSummary" in captured["url"]
-    assert m["heavy_stage_tasks"] == 32
-    assert m["task_med_ms"] == 120.0 and m["task_max_ms"] == 480.0
-    assert m["task_imbalance"] == 4.0
+    for stage, run_ms in ((1, 10), (1, 20), (2, 10), (2, 120), (2, 480), (2, 100)):
+        lines.append(
+            line(
+                {
+                    "Event": "SparkListenerTaskEnd",
+                    "Stage ID": stage,
+                    "Task End Reason": {"Reason": "Success"},
+                    "Task Metrics": {"Executor Run Time": run_ms},
+                }
+            )
+        )
+    d = bench_eventlog.StageLog(lines).task_time_dist("g")
+    assert d == {
+        "heavy_stage_tasks": 4,
+        "task_med_ms": 120.0,
+        "task_max_ms": 480.0,
+        "task_imbalance": 4.0,
+    }
 
 
-def test_task_time_dist_empty_stages_yields_empty():
-    assert bench._task_time_dist(None, []) == {}
+def test_skew_split_detected_not_detected_unknown(log):
+    """skew=true in the group's adaptive plans counts; the same join
+    with skew-join splitting off does not; a group with no SQL
+    execution (RDD-only work) is unknown, not False."""
+    assert log.skew_split_fired("q:skew") is True
+    assert log.skew_split_fired("q:noskew") is False
+    assert log.skew_split_fired("q:scan") is False
+    assert log.skew_split_fired("q:rdd") is None
+    assert log.stage_metrics("q:rdd")["stages"] > 0
 
 
-def test_skew_split_detection_reads_only_new_executions(monkeypatch):
-    """skew=true in an OLD execution's plan must not count; a new
-    execution containing the AQE skew-split marker must."""
-    execs = [
-        {"id": 3, "planDescription": "SortMergeJoin skew=true"},
-        {"id": 7, "planDescription": "BroadcastHashJoin"},
-    ]
-    monkeypatch.setattr(bench, "_sql_executions", lambda spark: execs)
-    assert bench._skew_split_fired(None, prev_max_sql_id=3) is False
-    execs.append({"id": 9, "planDescription": "SortMergeJoin(skew=true)"})
-    assert bench._skew_split_fired(None, prev_max_sql_id=3) is True
-    monkeypatch.setattr(bench, "_sql_executions", lambda spark: [])
-    assert bench._skew_split_fired(None, prev_max_sql_id=0) is None
+def test_recorder_fills_targets_after_resolve(log):
+    """StageRecorder.later targets stay empty until resolve() reads the
+    closed log, then get the requested subsets; the log dir is removed."""
+    rec = bench_eventlog.StageRecorder()
+    with open(LOG) as src, open(os.path.join(rec.log_dir, "app-1"), "w") as dst:
+        dst.write(src.read())
+    full = rec.later({}, "q:skew")
+    picked = rec.later({"sec": 1.0}, "q:skew", keys=("shuffle_write_mb", "spill_disk_mb"), tasks=True, skew=True)
+    none = rec.later({}, "q:never", skew=True)
+    assert full == {}
+    rec.resolve()
+    assert full == log.stage_metrics("q:skew")
+    assert set(picked) == {
+        "sec",
+        "shuffle_write_mb",
+        "spill_disk_mb",
+        "heavy_stage_tasks",
+        "task_med_ms",
+        "task_max_ms",
+        "task_imbalance",
+        "aqe_skew_split",
+    }
+    assert picked["aqe_skew_split"] is True
+    assert none == {"aqe_skew_split": None}
+    assert not os.path.exists(rec.log_dir)

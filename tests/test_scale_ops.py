@@ -572,11 +572,13 @@ def test_join_skew_strategy_selects_and_sizes_salt(spark):
     )
     assert salt == expected
 
-    # clamp: a pathological stat cannot buy unbounded replication
-    assert join_skew_strategy(hot, "k", max_salt=4, aqe_backstop=False) == (
-        "salted",
-        4,
-    )
+    # clamp: a pathological stat cannot buy unbounded replication. At
+    # the default budget the unclamped salt is only 2 at par=4, so a
+    # tighter budget makes it ceil(1.2 * par) >= 5 > 4 at every par >= 4
+    assert math.ceil(600 * par / (0.5 * 1000.0)) > 4
+    assert join_skew_strategy(
+        hot, "k", task_budget_ratio=0.5, max_salt=4, aqe_backstop=False
+    ) == ("salted", 4)
 
     # precomputed stats skip the aggregation pass but price identically
     assert join_skew_strategy(

@@ -85,15 +85,19 @@ def test_gate_off_when_layout_feeds_the_cores(spark, monkeypatch):
     assert "REPARTITION_BY_NUM" not in plan
 
 
-def test_values_identical_with_and_without(spark):
-    # The repartition must be value-invisible: same rows either way.
-    on = load_table(spark, SF_CORRECTNESS, "lineitem").orderBy(
-        "l_orderkey", "l_linenumber"
-    )
-    off = load_table(
-        spark, SF_CORRECTNESS, "lineitem", parallelize=False
-    ).orderBy("l_orderkey", "l_linenumber")
-    assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
+def test_values_identical_with_and_without(spark, monkeypatch):
+    # The repartition must be value-invisible: same rows either way,
+    # for every keyed table. The size floor drops to 1 byte so the
+    # gate fires on each sf0.01 file (documents is opt-in, so its "on"
+    # side asks for it), and the plan check proves the "on" side
+    # really carries the inserted exchange.
+    monkeypatch.setattr(tables, "SCAN_PAR_MIN_BYTES", 1)
+    for name in sorted(tables.PARALLELIZE_KEYS):
+        on = load_table(spark, SF_CORRECTNESS, name, parallelize=True)
+        off = load_table(spark, SF_CORRECTNESS, name, parallelize=False)
+        assert "REPARTITION_BY_NUM" in _plan(on), name
+        assert "REPARTITION_BY_NUM" not in _plan(off), name
+        assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty(), name
 
 
 def test_unknown_table_still_rejected(spark):

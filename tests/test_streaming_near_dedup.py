@@ -17,6 +17,7 @@ Pins the module's stated contract:
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,11 +116,22 @@ def test_end_to_end_stream_matches_hand_driven(spark, tmp_path):
     from event_stream_aggr_spark.sources.files import stream_parquet_dir
 
     src = str(tmp_path / "src")
-    docs = _docs(
-        spark,
-        [(1, _TXT_X), (2, _TXT_X), (3, _TXT_Y), (4, _TXT_Z), (5, _TXT_Z)],
-    )
-    docs.repartition(2).write.mode("overwrite").parquet(src)
+    os.makedirs(src)
+    rows = [(1, _TXT_X), (2, _TXT_X), (3, _TXT_Y), (4, _TXT_Z), (5, _TXT_Z)]
+    docs = _docs(spark, rows)
+    # a fixed arrival order: one file per doc, in id order, with
+    # increasing modification times (the file source's replay order).
+    # Under the sink's first-writer contract, 4 then wins the identical
+    # pair {4, 5} at any defaultParallelism; a repartitioned write would
+    # let the core count decide which file, and so which doc, lands first
+    t0 = int(time.time()) - 60
+    for i, row in enumerate(rows):
+        part = str(tmp_path / f"doc_{row[0]}")
+        _docs(spark, [row]).coalesce(1).write.parquet(part)
+        (name,) = [n for n in os.listdir(part) if n.endswith(".parquet")]
+        dst = os.path.join(src, f"doc_{row[0]}.parquet")
+        os.replace(os.path.join(part, name), dst)
+        os.utime(dst, (t0 + i, t0 + i))
     schema = spark.read.parquet(src).schema
 
     root, out = str(tmp_path / "state"), str(tmp_path / "out")

@@ -22,7 +22,9 @@ the largest non-splittable unit of scoring work; a 1000-executor
 cluster wanting ≤N rows per task picks cap ≈ N, so probing a tighter
 cap shows the knob flattening the curve exactly where k² crosses it.
 
-Writes one JSON line per cell + a summary; results go to
+Writes one JSON line per cell + a summary; the cells' shuffle and
+spill bytes come from the session's event log, so they appear in the
+summary line, written after the session stops. Results go to
 SCALING_AUDIT.md. The dense probe dir contains ONLY customer.parquet
 (the linkage queries read nothing else) and is deleted afterwards.
 
@@ -38,6 +40,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench_eventlog import StageRecorder, job_group, noop  # noqa: E402
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE = "/root/testdata/sf0.1"
@@ -100,11 +104,26 @@ def dense_customers(spark, k: int, out_dir: str) -> None:
     )
 
 
-def ladder_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
+def timed(spark, rec, group: str, run, n_runs: int) -> dict:
+    """``{"sec": min over n_runs of run()}``; the last run executes
+    under job group ``group``, and ``rec.resolve()`` adds its shuffle
+    and spill bytes."""
+    runs = []
+    for i in range(n_runs):
+        with job_group(spark, group if i == n_runs - 1 else None):
+            t0 = time.perf_counter()
+            run()
+            runs.append(time.perf_counter() - t0)
+    return rec.later(
+        {"sec": round(min(runs), 4)},
+        group,
+        keys=("shuffle_write_mb", "spill_disk_mb", "spill_mem_mb"),
+    )
+
+
+def ladder_cell(spark, rec, label: str, sf_dir: str, cap: int, n_runs: int) -> dict:
     """qer04's refinement ladder at an explicit cap on the dense
     corpus: per-level kept counts + purge + completeness + time."""
-    import bench
-
     from event_stream_aggr_spark.operators.linkage import (
         _a_side,
         _twin_side,
@@ -113,22 +132,9 @@ def ladder_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
 
     a = _a_side(spark, sf_dir)
     b = _twin_side(spark, sf_dir)
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        refinement_report(a, b, cap=cap).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    row = timed(
+        spark, rec, label, lambda: noop(refinement_report(a, b, cap=cap)), n_runs
+    )
     r = refinement_report(a, b, cap=cap).collect()[0].asDict()
     row.update(r)
     row["pair_completeness"] = round(
@@ -137,12 +143,10 @@ def ladder_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
     return row
 
 
-def composed_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
+def composed_cell(spark, rec, label: str, sf_dir: str, cap: int, n_runs: int) -> dict:
     """qer05's pass-diverse composition at an explicit cap on the
     dense corpus: per-pass per-level kept counts + purges +
     completeness + time (same method as ladder_cell)."""
-    import bench
-
     from event_stream_aggr_spark.operators.linkage import (
         _a_side,
         _twin_side,
@@ -151,22 +155,13 @@ def composed_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
 
     a = _a_side(spark, sf_dir)
     b = _twin_side(spark, sf_dir)
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        composed_blocking_report(a, b, cap=cap).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    row = timed(
+        spark,
+        rec,
+        label,
+        lambda: noop(composed_blocking_report(a, b, cap=cap)),
+        n_runs,
+    )
     r = composed_blocking_report(a, b, cap=cap).collect()[0].asDict()
     row.update(r)
     row["pair_completeness"] = round(
@@ -175,10 +170,9 @@ def composed_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
     return row
 
 
-def probe_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
+def probe_cell(spark, rec, label: str, sf_dir: str, cap: int, n_runs: int) -> dict:
     """qer01's report dataflow at an explicit cap, plus the qer03
     observability counters for the same corpus/cap."""
-    import bench
     from pyspark.sql import functions as F
 
     from event_stream_aggr_spark.operators.linkage import (
@@ -208,20 +202,7 @@ def probe_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
             )
         )
 
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        report().write.mode("overwrite").format("noop").save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    row = timed(spark, rec, label, lambda: noop(report()), n_runs)
     row["n_records"] = n_records
     row["n_candidates"] = candidate_pairs(a, b, cap).count()
     purged = purged_block_counts(a, b, cap).first()
@@ -248,13 +229,8 @@ def main() -> None:
     ks = sorted({int(x) for x in args}) or [30, 100]
     from event_stream_aggr_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="er_density_probe",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "20000",
-        },
-    )
+    rec = StageRecorder()
+    spark = get_spark(app_name="er_density_probe", extra_conf=rec.conf())
     out: dict = {"base": BASE, "cells": {}}
     for k in ks:
         probe_dir = os.path.join(HERE, ".scale_probe", f"er_dense_{k}x")
@@ -265,25 +241,27 @@ def main() -> None:
                 if gk != k or composed_only:
                     continue
                 label = f"k{k}_cap{'_off' if cap == UNCAPPED else cap}"
-                cell = probe_cell(spark, probe_dir, cap, n_runs)
+                cell = probe_cell(spark, rec, label, probe_dir, cap, n_runs)
                 out["cells"][label] = cell
                 print(json.dumps({label: cell}))
             for gk, cap, n_runs in LADDER_GRID:
                 if gk != k or composed_only:
                     continue
                 label = f"k{k}_ladder_cap{cap}"
-                cell = ladder_cell(spark, probe_dir, cap, n_runs)
+                cell = ladder_cell(spark, rec, label, probe_dir, cap, n_runs)
                 out["cells"][label] = cell
                 print(json.dumps({label: cell}))
             for gk, cap, n_runs in COMPOSED_GRID:
                 if gk != k:
                     continue
                 label = f"k{k}_composed_cap{cap}"
-                cell = composed_cell(spark, probe_dir, cap, n_runs)
+                cell = composed_cell(spark, rec, label, probe_dir, cap, n_runs)
                 out["cells"][label] = cell
                 print(json.dumps({label: cell}))
         finally:
             shutil.rmtree(probe_dir, ignore_errors=True)
+    spark.stop()
+    rec.resolve()
     print(json.dumps(out))
 
 

@@ -19,6 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench_eventlog import StageRecorder, min_of_2, noop  # noqa: E402
+
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROBE = sys.argv[1] if len(sys.argv) > 1 else os.path.join(HERE, ".scale_probe", "sf3")
 BASE = "/root/testdata/sf0.1"
@@ -62,15 +64,13 @@ def main() -> None:
         )
         generated = True
 
-    spark = get_spark(
-        app_name="upscale_30x",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "20000"},
-    )
+    rec = StageRecorder()
+    spark = get_spark(app_name="upscale_30x", extra_conf=rec.conf())
     specs = load_all()
     out: dict = {"probe_dir": PROBE, "data_ratio_vs_primary": 30.0, "queries": {}}
     zdir = os.path.join(HERE, ".scale_probe", "zipf_30x_probe")
     try:
-        _probe(spark, specs, out)
+        by_label = _probe(spark, rec, specs, out)
         print(f"generating Zipf twin of the probe at {zdir}...")
         subprocess.run(
             [
@@ -83,8 +83,7 @@ def main() -> None:
             ],
             check=True,
         )
-        _skew_probe(spark, out, zdir)
-        print(json.dumps(out))
+        _skew_probe(spark, rec, out, zdir)
     finally:
         # ALWAYS delete generated probe dirs — a crash mid-probe that
         # leaked one would silently re-point every later round's bench
@@ -93,44 +92,44 @@ def main() -> None:
         if generated:
             shutil.rmtree(PROBE, ignore_errors=True)
             print(f"deleted generated probe dir {PROBE}")
-
-
-def _probe(spark, specs, out) -> None:
-    import bench
-
-    # warmup
-    specs[QUERIES[0]].fn(spark, BASE).write.mode("overwrite").format("noop").save()
-
-    for name in QUERIES:
-        row: dict = {}
-        for label, sf_path in (("primary", BASE), ("probe", PROBE)):
-            runs = []
-            for i in range(2):
-                pre = bench._max_stage_id(spark) if i == 1 else None
-                t0 = time.perf_counter()
-                specs[name].fn(spark, sf_path).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-                if i == 1 and pre is not None:
-                    m = bench._stage_metrics_since(spark, pre)
-                    if m:
-                        row[f"{label}_shuffle_write_mb"] = m["shuffle_write_mb"]
-                        row[f"{label}_input_mb"] = m["input_mb"]
-                        row[f"{label}_spill_disk_mb"] = m["spill_disk_mb"]
-                        row[f"{label}_spill_mem_mb"] = m["spill_mem_mb"]
-            row[f"{label}_sec"] = round(min(runs), 4)
-        row["time_ratio"] = round(row["probe_sec"] / row["primary_sec"], 2)
+    # stage metrics come from the event log, complete once the session stops
+    spark.stop()
+    rec.resolve()
+    for name, labels in by_label.items():
+        row = out["queries"][name]
+        for label, m in labels.items():
+            row.update({f"{label}_{k}": v for k, v in m.items()})
         if row.get("primary_shuffle_write_mb"):
             row["shuffle_ratio"] = round(
                 row["probe_shuffle_write_mb"] / row["primary_shuffle_write_mb"], 2
             )
-        out["queries"][name] = row
-        print(json.dumps({name: row}))
     print(json.dumps(out))
 
 
-def _skew_probe(spark, out, zdir: str) -> None:
+def _probe(spark, rec, specs, out) -> dict:
+    """Time every query at both scales; returns {name: {label: dict}}
+    that ``rec.resolve()`` fills with each warm run's stage metrics."""
+    noop(specs[QUERIES[0]].fn(spark, BASE))  # warmup
+    by_label: dict = {}
+    for name in QUERIES:
+        row: dict = {}
+        for label, sf_path in (("primary", BASE), ("probe", PROBE)):
+            group = f"{label}:{name}"
+            row[f"{label}_sec"] = min_of_2(
+                spark, lambda: noop(specs[name].fn(spark, sf_path)), group
+            )
+            by_label.setdefault(name, {})[label] = rec.later(
+                {},
+                group,
+                keys=("shuffle_write_mb", "input_mb", "spill_disk_mb", "spill_mem_mb"),
+            )
+        row["time_ratio"] = round(row["probe_sec"] / row["primary_sec"], 2)
+        out["queries"][name] = row
+        print(json.dumps({name: row}))
+    return by_label
+
+
+def _skew_probe(spark, rec, out, zdir: str) -> None:
     """Round-10 VERDICT ask #7: exercise auto_skew_join where the hot
     key is ~30x the sf0.1 grain — the orders⋈lineitem revenue rollup
     (bench._salted_twin's shape, broadcast escape hatch closed) on a
@@ -141,7 +140,6 @@ def _skew_probe(spark, out, zdir: str) -> None:
     must credit the backstop and ride plain), then the selector's
     decision and the executed salted plan with the backstop disarmed
     (the fallback — the excess-sized salt-count formula at 30x)."""
-    import bench
     from pyspark.sql import functions as F
 
     from event_stream_aggr_spark.operators.skew import (
@@ -201,33 +199,21 @@ def _skew_probe(spark, out, zdir: str) -> None:
                 conf.set("spark.sql.adaptive.skewJoin.enabled", skew_on)
                 li, o = build(sf_path)
                 choice, k = join_skew_strategy(li, "l_orderkey")
-                runs, metrics = [], {}
-                for i in range(2):
-                    pre = bench._max_stage_id(spark) if i == 1 else None
-                    t0 = time.perf_counter()
+                group = f"{label}:{variant}"
+
+                def run():
                     li2, o2 = build(sf_path)
-                    revenue(auto_skew_join(li2, o2, "l_orderkey")).write.mode(
-                        "overwrite"
-                    ).format("noop").save()
-                    runs.append(time.perf_counter() - t0)
-                    if i == 1 and pre is not None:
-                        m = bench._stage_metrics_since(spark, pre)
-                        if m:
-                            metrics.update(
-                                shuffle_write_mb=m["shuffle_write_mb"],
-                                spill_disk_mb=m["spill_disk_mb"],
-                                spill_mem_mb=m["spill_mem_mb"],
-                            )
-                        metrics.update(
-                            bench._task_time_dist(
-                                spark, bench._new_stages_since(spark, pre)
-                            )
-                        )
-                row[variant] = {
-                    "sec": round(min(runs), 4),
-                    "strategy": {"choice": choice, "salt": k},
-                    **metrics,
-                }
+                    noop(revenue(auto_skew_join(li2, o2, "l_orderkey")))
+
+                row[variant] = rec.later(
+                    {
+                        "sec": min_of_2(spark, run, group),
+                        "strategy": {"choice": choice, "salt": k},
+                    },
+                    group,
+                    keys=("shuffle_write_mb", "spill_disk_mb", "spill_mem_mb"),
+                    tasks=True,
+                )
             section[label] = row
             print(json.dumps({label: row}))
         if "zipf1_baseline" in section and "zipf_30x" in section:
